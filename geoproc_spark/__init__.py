@@ -10,7 +10,7 @@ over web-page corpora:
   column expressions)
 - point-in-polygon spatial joins (covering-cell equi-join + exact
   ray-cast refine, salting for hot cells)
-- kNN via cell-ring expansion with exact top-k semantics
+- kNN via one histogram-bounded candidate join with exact top-k semantics
 - raster<->vector tiling with geoproc-parity image algebra
   (float64 promotion, mask union via np.maximum — see
   /root/reference/geoproc/server/image.py:295-315)

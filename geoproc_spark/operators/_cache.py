@@ -5,7 +5,13 @@ lazy DataFrames whose plans reference the cached data, so they cannot
 unpersist before the caller's action. Left alone, every call in a
 long-lived session pins another copy in executor storage (ADVICE r01).
 `swap_cache` bounds that to ONE cached lineage per operator key: each call
-unpersists the previous call's cache before persisting its own.
+persists its own plan and unpersists the previous call's, unless the two
+plans have the same semantics. Spark keeps one cache entry per semantic
+plan, so `persist()` on an equal plan returns the entry already there, and
+unpersisting the previous holder would drop the new call's cache with it.
+Keeping the shared entry cannot serve stale data: Spark's CacheManager
+already answers every equal plan from it, and table snapshots get a new
+path (`data/snap-<n>/`) per write, so a changed table is a different plan.
 
 Thread safety (ADVICE r02): bench.py and real pipelines run jobs on
 threads, so the registry swap is guarded by a lock — without it two
@@ -34,7 +40,8 @@ def swap_cache(key: str, df: DataFrame) -> DataFrame:
         _LAST[key] = cached
     if prev is not None and prev is not cached:
         try:
-            prev.unpersist()
+            if not prev.sameSemantics(cached):
+                prev.unpersist()
         except Exception:
             pass  # session may be gone; nothing to release
     return cached

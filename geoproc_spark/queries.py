@@ -1,7 +1,7 @@
 """Registry of driver-checkable queries: Spark implementation + DuckDB oracle.
 
 Each entry runs the REAL engine path (pandas-UDF extraction, covering-cell
-joins, ring-expansion kNN, ...) on the synthetic corpus derived from the
+joins, histogram-bounded kNN, ...) on the synthetic corpus derived from the
 driver's parquet tables; the oracle recomputes the expected result in plain
 SQL from the integer-exact ground truth. Column names and types are aligned
 on both sides (the driver hashes values after sorting columns by name).
@@ -327,7 +327,7 @@ SELECT CAST(qid AS BIGINT) AS qid, page_id, rank FROM r WHERE rank <= k
 """,
 )
 def geo_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact kNN via cell-ring expansion; matches brute force by construction."""
+    """Exact kNN from one histogram-bounded candidate join; matches brute force by construction."""
     pages = synth.pages_df(spark, sf_dir).select("page_id", "lat_s", "lon_s")
     qrows = synth.knn_query_points()
     queries = spark.createDataFrame(qrows, "qid long, qlat_s long, qlon_s long, k int")

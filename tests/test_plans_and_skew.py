@@ -412,3 +412,27 @@ def test_write_bucketed_guards_destructive_cleanup(spark, tmp_path):
         import shutil
 
         shutil.rmtree(loc, ignore_errors=True)
+
+
+def test_swap_cache_keeps_an_equal_plan_and_evicts_a_different_one(spark):
+    """Swapping a plan with the same semantics under one key must leave
+    Spark's CacheManager holding it (persist() on an equal plan shares the
+    existing entry, so unpersisting the previous holder would drop both);
+    a different plan still evicts the previous one, keeping one lineage per
+    key. storageLevel asks the CacheManager, not PySpark's is_cached flag."""
+    from pyspark import StorageLevel
+
+    from geoproc_spark.operators import _cache
+
+    def plan(n):
+        return spark.range(n).withColumn("sq", F.col("id") * F.col("id"))
+
+    _cache.swap_cache("test_swap", plan(100))
+    same = _cache.swap_cache("test_swap", plan(100))
+    assert same.storageLevel != StorageLevel.NONE
+    assert same.count() == 100
+    other = _cache.swap_cache("test_swap", plan(200))
+    assert other.storageLevel != StorageLevel.NONE
+    assert same.storageLevel == StorageLevel.NONE
+    _cache.release("test_swap")
+    assert other.storageLevel == StorageLevel.NONE

@@ -1,6 +1,8 @@
 """Spatial-join operator: PIP kernel vs shapely-free numpy oracle, path
 equivalence (covering-cell vs salted vs broadcast), concave polygons."""
 
+import logging
+
 import numpy as np
 from pyspark.sql import functions as F
 
@@ -194,39 +196,45 @@ def test_broadcast_join_nan_coordinates_never_match(spark):
     assert {r.page_id for r in got} == {1}
 
 
-def test_knn_sparse_multi_round_flat_lineage(spark):
-    """A sparse corpus forces several ring-expansion rounds; the per-round
-    localCheckpoint must (a) keep the final plan free of the per-round
-    candidate-join subtrees (bounded Exchange count regardless of rounds)
-    and (b) leave the exact result intact vs numpy brute force."""
-    from geoproc_spark.operators import knn as knn_op
-
-    # 8 pages scattered ~continental distances apart; k=3 with a tiny seed
-    # radius guarantees >= 2 expansion rounds at zoom 6
-    pts = [(i, int((i * 37 % 140 - 70) * 1e4), int((i * 83 % 340 - 170) * 1e4)) for i in range(8)]
-    pages = spark.createDataFrame(pts, "page_id long, lat_s long, lon_s long")
-    queries = spark.createDataFrame(
-        [(0, 0, 0, 3), (1, 500000, 900000, 3)], "qid long, qlat_s long, qlon_s long, k int"
-    )
-    out = knn_op.knn_join(queries, pages, zoom=6, n_pages=8, k_max=3)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") <= 4, plan  # no per-round join subtrees left
-
-    got = {(r.qid, r.page_id, r.rank) for r in out.collect()}
+def _knn_brute(pts, queries) -> set:
+    """Exact top-k by (d2, page_id) over (page_id, lat_s, lon_s) rows; points
+    and queries with a null coordinate take no part."""
+    arr = np.array([p for p in pts if None not in p], dtype=np.int64).reshape(-1, 3)
     want = set()
-    arr = np.array(pts, dtype=np.int64)
-    for qid, qla, qlo, k in [(0, 0, 0, 3), (1, 500000, 900000, 3)]:
+    for qid, qla, qlo, k in (q for q in queries if None not in q):
         d2 = (arr[:, 1] - qla) ** 2 + (arr[:, 2] - qlo) ** 2
         order = np.lexsort((arr[:, 0], d2))[:k]
         for rank, j in enumerate(order, start=1):
             want.add((qid, int(arr[j, 0]), rank))
-    assert got == want
+    return want
 
 
-def test_knn_collect_and_distributed_paths_agree(spark):
-    """knn_join's driver-resident query path (collect_queries=True, the
-    default) and the fully-distributed loop must return identical exact
-    top-k, including multi-round ring expansion and the brute-force twin."""
+def _knn_rows(df) -> set:
+    return {(r.qid, r.page_id, r.rank) for r in df.collect()}
+
+
+def test_knn_sparse_multi_round_flat_lineage(spark):
+    """A sparse corpus: each query's bound spans many cells. The plan must
+    stay flat (bounded Exchange count: one candidate join, one rank window)
+    and the result exact vs numpy brute force."""
+    from geoproc_spark.operators import knn as knn_op
+
+    # 8 pages scattered ~continental distances apart at zoom 6
+    pts = [(i, int((i * 37 % 140 - 70) * 1e4), int((i * 83 % 340 - 170) * 1e4)) for i in range(8)]
+    pages = spark.createDataFrame(pts, "page_id long, lat_s long, lon_s long")
+    qrows = [(0, 0, 0, 3), (1, 500000, 900000, 3)]
+    queries = spark.createDataFrame(qrows, "qid long, qlat_s long, qlon_s long, k int")
+    out = knn_op.knn_join(queries, pages, zoom=6, n_pages=8, k_max=3)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") <= 4, plan
+
+    assert _knn_rows(out) == _knn_brute(pts, qrows)
+
+
+def test_knn_size_rule_fallback_matches_driver_path(spark, monkeypatch, caplog):
+    """Above MAX_DRIVER_QUERIES the bound runs in mapInPandas instead of on
+    the driver; both paths return the brute-force top-k, and the fallback
+    is logged with its reason."""
     from geoproc_spark.operators import knn as knn_op
 
     pts = [
@@ -234,28 +242,55 @@ def test_knn_collect_and_distributed_paths_agree(spark):
         for i in range(8)
     ]
     pages = spark.createDataFrame(pts, "page_id long, lat_s long, lon_s long")
-    queries = spark.createDataFrame(
-        [(0, 0, 0, 3), (1, 500000, 900000, 2)],
-        "qid long, qlat_s long, qlon_s long, k int",
+    qrows = [(0, 0, 0, 3), (1, 500000, 900000, 2), (2, -300000, -1200000, 1)]
+    queries = spark.createDataFrame(qrows, "qid long, qlat_s long, qlon_s long, k int")
+    got_driver = _knn_rows(knn_op.knn_join(queries, pages, zoom=6))
+
+    monkeypatch.setattr(knn_op, "MAX_DRIVER_QUERIES", 1)
+    with caplog.at_level(logging.INFO, logger="geoproc_spark"):
+        got_mapped = _knn_rows(knn_op.knn_join(queries, pages, zoom=6))
+    assert "mapInPandas" in caplog.text
+    assert got_mapped == got_driver == _knn_brute(pts, qrows)
+
+
+def test_knn_hostile_inputs_match_brute_force(spark, caplog):
+    """Points beyond the +-85.05 deg Mercator clamp (cell ids fold them into
+    the edge rows), queries at +-179.99 deg longitude, more copies of one
+    position than k_max, null coordinates, a table with fewer than k points
+    and an empty table: all exact vs numpy brute force."""
+    from geoproc_spark.operators import knn as knn_op
+
+    schema = "page_id long, lat_s long, lon_s long"
+    qschema = "qid long, qlat_s long, qlon_s long, k int"
+    pts = (
+        [(1 + i, 899000 - 1000 * i, 1799000 - 2000 * i) for i in range(6)]  # ~89.9 N
+        + [(20 + i, -880000 + 500 * i, -1799500 + 700 * i) for i in range(6)]  # ~88 S
+        + [(40, 850000, 0), (41, 860000, 10), (42, -851000, -5)]
+        + [(100 + i, 123400, 567800) for i in range(12)]  # 12 copies, k_max 5
+        + [(200 + i, 100000 * (i % 7) - 300000, 250000 * i - 1700000) for i in range(14)]
+        + [(300, None, 5), (301, 7, None), (302, None, None)]
     )
-    got_c = {
-        (r.qid, r.page_id, r.rank)
-        for r in knn_op.knn_join(
-            queries, pages, zoom=6, n_pages=8, collect_queries=True
-        ).collect()
-    }
-    got_d = {
-        (r.qid, r.page_id, r.rank)
-        for r in knn_op.knn_join(
-            queries, pages, zoom=6, n_pages=8, collect_queries=False
-        ).collect()
-    }
-    assert got_c == got_d
-    want = set()
-    arr = np.array(pts, dtype=np.int64)
-    for qid, qla, qlo, k in [(0, 0, 0, 3), (1, 500000, 900000, 2)]:
-        d2 = (arr[:, 1] - qla) ** 2 + (arr[:, 2] - qlo) ** 2
-        order = np.lexsort((arr[:, 0], d2))[:k]
-        for rank, j in enumerate(order, start=1):
-            want.add((qid, int(arr[j, 0]), rank))
-    assert got_c == want
+    qrows = [
+        (0, 890000, 1799900, 5),
+        (1, -870000, -1799900, 4),
+        (2, 0, 1799900, 3),
+        (3, 0, -1799900, 5),
+        (4, 123400, 567800, 5),
+        (5, 123401, 567799, 2),
+        (6, 855000, 3, 1),
+        (7, None, 100, 2),
+    ]
+    pages = spark.createDataFrame(pts, schema)
+    queries = spark.createDataFrame(qrows, qschema)
+    assert _knn_rows(knn_op.knn_join(queries, pages)) == _knn_brute(pts, qrows)
+
+    # fewer than k points: every point comes back, ranked; the whole-table
+    # bound is logged
+    few = [(1, 100, 100), (2, -50000, 70000), (3, 850000, -1799999)]
+    with caplog.at_level(logging.INFO, logger="geoproc_spark"):
+        got = _knn_rows(knn_op.knn_join(queries, spark.createDataFrame(few, schema)))
+    assert "fewer than k points" in caplog.text
+    assert got == _knn_brute(few, qrows)
+    assert len(got) == sum(min(q[3], len(few)) for q in qrows if None not in q)
+
+    assert _knn_rows(knn_op.knn_join(queries, spark.createDataFrame([], schema))) == set()
