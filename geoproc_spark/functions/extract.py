@@ -10,12 +10,17 @@ mention formats, matches taken in document order, first match wins:
 Determinism contract (input_hint): extraction(text) is byte-identical per
 url across runs, partitionings, and parallelism levels. The regexes are
 compiled once per executor; no locale, no normalization beyond the already-
-UTF-8 input; ties broken by document order.
+UTF-8 input; ties broken by document order. Digits are ASCII `[0-9]` only:
+Python's `\\d` would also take Arabic-Indic or fullwidth digits (and `float`
+parses them), which RE2 and Java reject.
 
-Two implementations with identical results:
-- `extract_coords_udf` — pandas UDF (Arrow-batched; the mandated path)
-- `extract_coords_cols` — pure JVM `regexp_extract` columns (the zero-Python
-  fast path for clusters where even Arrow transfer matters)
+Three implementations with identical results:
+- `with_coords_arrow` — `mapInArrow` + Arrow's C++ RE2, the engine path
+  (the geo pipeline's extract stage and the driver geo queries)
+- `extract_coords_udf` — pandas UDF over `_first_coord`, the readable
+  per-row twin the tests and the extract kernel timing compare against
+- `extract_coords_cols` — pure JVM `regexp_extract` columns (no Python
+  boundary at all)
 """
 
 from __future__ import annotations
@@ -27,7 +32,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-_NUM = r"(-?\d+\.\d+)"
+_NUM = r"(-?[0-9]+\.[0-9]+)"
 # Alternation order is part of the pinned spec: scanning is left-to-right by
 # match *position*; among patterns matching at the same position the first
 # alternative wins.
@@ -84,9 +89,9 @@ def extract_coords_all_udf(text: pd.Series) -> pd.Series:
 
 
 _ARROW_PATTERN = (
-    r"(?:lat (?P<a1>-?\d+\.\d+), lon (?P<b1>-?\d+\.\d+))"
-    r"|(?:\((?P<a2>-?\d+\.\d+), (?P<b2>-?\d+\.\d+)\))"
-    r"|(?:geo:(?P<a3>-?\d+\.\d+),(?P<b3>-?\d+\.\d+))"
+    r"(?:lat (?P<a1>-?[0-9]+\.[0-9]+), lon (?P<b1>-?[0-9]+\.[0-9]+))"
+    r"|(?:\((?P<a2>-?[0-9]+\.[0-9]+), (?P<b2>-?[0-9]+\.[0-9]+)\))"
+    r"|(?:geo:(?P<a3>-?[0-9]+\.[0-9]+),(?P<b3>-?[0-9]+\.[0-9]+))"
 )
 
 
@@ -146,7 +151,7 @@ def _spark_types(df, cols: list[str]) -> list[tuple[str, str]]:
 # pages, a geo.position meta tag (synth._HTML_SQL). The HTML spec, pinned:
 #   1. a <meta name="geo.position" content="LAT;LON"> wins if present;
 #   2. otherwise the text patterns run over the whole document.
-_META_RE = re.compile(r'<meta name="geo\.position" content="(-?\d+\.\d+);(-?\d+\.\d+)">')
+_META_RE = re.compile(rf'<meta name="geo\.position" content="{_NUM};{_NUM}">')
 _BODY_RE = re.compile(r"<p>(.*?)</p>", re.DOTALL)
 
 

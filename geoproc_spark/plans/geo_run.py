@@ -1,9 +1,12 @@
 """The production geo pipeline as checkpointed stages.
 
-scan -> extract (Arrow UDF) -> cell encode + cell-prefix partitioning ->
-covering-cell PIP join -> per-tile stats, each stage a resumable snapshot.
-This is the spark-submit entry path; `bench.py` times the same stages
-un-checkpointed.
+scan -> extract (mapInArrow + RE2) -> cell encode + cell-prefix
+partitioning -> covering-cell PIP join -> per-tile stats, each stage a
+resumable snapshot. This is the spark-submit entry path. `bench.py`'s geo
+leaf runs the same extractor, PIP join and tile stats (at zoom 8), but
+without `Pipeline`: it writes the extracted points once as plain
+unpartitioned parquet (no cell columns, no `cell_p` layout, no manifest)
+and runs the join and the tile stats on that file as two concurrent jobs.
 """
 
 from __future__ import annotations
@@ -37,10 +40,8 @@ def stage_pages(sf_dir: str, replicate: int = 1):
 
 def stage_extract():
     def fn(spark: SparkSession, inputs) -> DataFrame:
-        pages = inputs["pages"]
-        pts = pages.select(
-            "page_id", "url", extract.extract_coords_udf("text").alias("c")
-        ).select("page_id", "url", F.col("c.lat").alias("lat"), F.col("c.lon").alias("lon"))
+        pages = inputs["pages"].select("page_id", "url", "text")
+        pts = extract.with_coords_arrow(pages, keep=["page_id", "url"])
         pts = pts.filter(F.col("lat").isNotNull())
         cell = cells.cell_id_col(F.col("lat"), F.col("lon"), EXTRACT_ZOOM)
         return pts.withColumn("cell", cell).withColumn(

@@ -1,6 +1,6 @@
 """Registry of driver-checkable queries: Spark implementation + DuckDB oracle.
 
-Each entry runs the REAL engine path (pandas-UDF extraction, covering-cell
+Each entry runs the REAL engine path (Arrow RE2 extraction, covering-cell
 joins, histogram-bounded kNN, ...) on the synthetic corpus derived from the
 driver's parquet tables; the oracle recomputes the expected result in plain
 SQL from the integer-exact ground truth. Column names and types are aligned
@@ -72,12 +72,10 @@ def all_oracle_sql() -> dict[str, str]:
 
 
 def _pages_with_coords(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The engine path: synthesize pages, extract coords from TEXT via the
-    Arrow UDF (never from the ground-truth columns)."""
-    pages = synth.pages_df(spark, sf_dir)
-    return pages.select(
-        "page_id", "url", "lang", "text", extract.extract_coords_udf("text").alias("c")
-    ).select("page_id", "url", "lang", F.col("c.lat").alias("lat"), F.col("c.lon").alias("lon"))
+    """The engine path: synthesize pages, extract coords from TEXT with the
+    pipeline's extractor (never from the ground-truth columns)."""
+    pages = synth.pages_df(spark, sf_dir).select("page_id", "url", "lang", "text")
+    return extract.with_coords_arrow(pages, keep=["page_id", "url", "lang"])
 
 
 def _pages_cte() -> str:

@@ -70,6 +70,13 @@ def write_table(
     Per-file row counts come from the parquet footers (no extra Spark job) —
     they are the per-partition lineage the pipeline layer records.
 
+    A partitioned write is clustered first: `rebalance` on the partition
+    columns (Iceberg's `write.distribution-mode=hash`) hands each partition
+    value to one task, so the snapshot holds about one file per value
+    rather than one per value per input split (64 prefixes x N splits),
+    and every later read lists and opens that many fewer files. AQE still
+    splits a hot value into advisory-size files and merges small ones.
+
     Data files go to a fresh `data/snap-<n>/` directory BEFORE any metadata
     is written, and the version-hint pointer flips last — a forced re-run
     that crashes mid-write can never corrupt the currently-committed
@@ -89,6 +96,8 @@ def write_table(
     prev = current_snapshot_id(path)
     snap_id = (prev or 0) + 1
     data = os.path.join(_data_dir(path), f"snap-{snap_id}")
+    if partition_by:
+        df = df.hint("rebalance", *partition_by)
     writer = df.write.mode(mode)
     if partition_by:
         writer = writer.partitionBy(*partition_by)

@@ -70,6 +70,60 @@ def test_arrow_path_matches_udf(spark):
     assert arrow_rows == pandas_rows
 
 
+def _three_paths(spark, texts):
+    """(pandas UDF, Arrow RE2, JVM regexp) results per input text, in order."""
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, text string")
+    lat_j, lon_j = extract.extract_coords_cols(F.col("text"))
+    udf_jvm = df.select(
+        "i", extract.extract_coords_udf("text").alias("c"), lat_j.alias("jlat"), lon_j.alias("jlon")
+    ).collect()
+    arrow = {r.i: (r.lat, r.lon) for r in extract.with_coords_arrow(df, keep=["i"]).collect()}
+    by_i = sorted(udf_jvm, key=lambda r: r.i)
+    return (
+        [(r.c.lat, r.c.lon) for r in by_i],
+        [arrow[i] for i in range(len(texts))],
+        [(r.jlat, r.jlon) for r in by_i],
+    )
+
+
+def test_extractors_reject_non_ascii_digits(spark):
+    """The spec's digits are ASCII: Arabic-Indic and fullwidth digits are no
+    coordinate on any of the three paths (Python's \\d would take them)."""
+    texts = ["lat \u0664\u0668.\u0668\u0665, lon 2.35", "(\uff112.5, 3.5)", "geo:1.5,\u0662.5"]
+    udf, arrow, jvm = _three_paths(spark, texts)
+    assert udf == arrow == jvm == [(None, None)] * len(texts)
+    html = '<meta name="geo.position" content="\u0664\u0668.5;2.5">'.encode()
+    assert extract._first_coord_html(html) == (None, None)
+
+
+def test_arrow_path_matches_first_coord_on_hostile_text(spark):
+    """with_coords_arrow (and the UDF and JVM paths) == _first_coord on
+    inputs the corpus never makes: null and empty text, a multi-MB page
+    whose only mention is at its end, two formats in one page (leftmost
+    wins), malformed mentions, digit runs beyond double range."""
+    big = "x" * (3 << 20)
+    texts = [
+        None,
+        "",
+        big + " (1.25, -2.5)",
+        "geo:7.5,8.5 then lat 1.5, lon 2.5",
+        "lat 1.5, lon 2.5 then geo:7.5,8.5",
+        "(3.5, 4.5) geo:7.5,8.5 lat 1.5, lon 2.5",
+        "lat 1., lon 2",
+        "lat 1.5, lon 2 then (-.5, 1.0) then geo:3.5,4.5",
+        "lat 1.5,lon 2.5 ( 1.5, 2.5) geo: 1.5,2.5",
+        "lat 1" + "0" * 400 + ".5, lon 2.5",
+        "geo:0." + "0" * 400 + "1,-0.0",
+    ]
+    want = [extract._first_coord(t) for t in texts]
+    assert want[2] == (1.25, -2.5)
+    assert want[3] == (7.5, 8.5) and want[4] == (1.5, 2.5) and want[5] == (3.5, 4.5)
+    assert want[6] == want[8] == (None, None) and want[7] == (3.5, 4.5)
+    udf, arrow, jvm = _three_paths(spark, texts)
+    assert arrow == want
+    assert udf == jvm == want
+
+
 def test_all_matches_document_order(spark):
     df = spark.createDataFrame(
         [("geo:1.5,2.5 then (3.25, -4.75) and lat 5.5, lon 6.5",), ("no coords",)],

@@ -33,6 +33,20 @@ def test_tableformat_snapshots_and_time_travel(spark, tmp_path):
     assert tf.current_snapshot_id(p) == 2
 
 
+def test_partitioned_write_is_one_file_per_value(spark, tmp_path):
+    """A partitioned snapshot is clustered by its partition column: 8 input
+    splits that each hold every k value still give one file per value."""
+    import os
+
+    p = str(tmp_path / "t")
+    df = spark.range(0, 800, 1, numPartitions=8).selectExpr("id", "id % 5 AS k")
+    m = tf.write_table(df, p, partition_by=["k"])
+    dirs = sorted(os.path.basename(os.path.dirname(f["path"])) for f in m["files"])
+    assert dirs == [f"k={k}" for k in range(5)]
+    assert m["total_rows"] == 800
+    assert tf.read_table(spark, p).count() == 800
+
+
 def _sorted(df):
     return sorted(map(tuple, df.collect()))
 
@@ -99,6 +113,9 @@ def test_geo_pipeline_end_to_end_resume_identical(spark, tmp_path):
     snap_dir = os.path.join(f"{base}/geo/extract", mext["base"])
     parts = [d for d in os.listdir(snap_dir) if d.startswith("cell_p=")]
     assert len(parts) > 1
+    # ...clustered: no more files than cell_p directories, rows all accounted
+    assert len(mext["files"]) <= len(parts)
+    assert sum(f["rows"] for f in mext["files"]) == mext["total_rows"]
     # ...and the partition column survives a time-travel read (basePath)
     tt = tf.read_table(spark, f"{base}/geo/extract", snapshot=mext["snapshot_id"])
     assert "cell_p" in tt.columns
